@@ -44,8 +44,56 @@ object SparkEntry {
 
   // ---- shared inputs ------------------------------------------------------
 
-  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Base-table read: the one path every query builder takes to its input
+    * tables. Spark infers a Parquet schema by running a one-task job that
+    * reads a footer, and a plain `read.parquet` pays that job on every
+    * build of every query. A regular file's schema is therefore inferred
+    * once per JVM and kept in [[tblSchemas]]. The key is the file's
+    * canonical path, size, modification time and file key (inode), plus
+    * the session's explicitly set confs that steer Parquet schema
+    * conversion (keys containing `parquet`, e.g. the `nanosAsLong` that
+    * [[events]] sets, and `spark.sql.caseSensitive`). An overwritten file
+    * or a flipped conf is a new key, so it is inferred afresh. Later reads
+    * pass the cached schema, which is the inferred one, so the analyzed
+    * and physical plans are those of the plain read. Anything that is not
+    * a regular local file (a directory-shaped dataset, a remote URI) is
+    * read with plain inference. */
+  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    tblSchemaKey(s, path) match {
+      case None => s.read.parquet(path)
+      case Some(key) =>
+        // not computeIfAbsent: that would run the inference job while
+        // holding the map's bin lock
+        val schema = Option(tblSchemas.get(key)).getOrElse {
+          val inferred = s.read.parquet(path).schema
+          Option(tblSchemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+        }
+        s.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** (real path, size, modification time, file key, schema confs). */
+  private type TblKey = (String, Long, String, AnyRef, Seq[(String, String)])
+
+  private val tblSchemas = new java.util.concurrent.ConcurrentHashMap[
+    TblKey, org.apache.spark.sql.types.StructType]()
+
+  private def tblSchemaKey(s: SparkSession, path: String): Option[TblKey] =
+    try {
+      val p = java.nio.file.Paths.get(path)
+      val a = java.nio.file.Files.readAttributes(p,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      if (!a.isRegularFile) None
+      else Some((p.toRealPath().toString, a.size,
+        a.lastModifiedTime.toString, a.fileKey,
+        s.conf.getAll.toSeq.filter { case (k, _) =>
+          k.contains("parquet") || k == "spark.sql.caseSensitive"
+        }.sorted))
+    } catch {
+      case _: java.io.IOException | _: java.nio.file.InvalidPathException =>
+        None
+    }
 
   /** `events.ts` has shipped in two physical forms across testdata
     * generations: parquet TIMESTAMP(NANOS) (rejected by Spark unless
@@ -55,7 +103,9 @@ object SparkEntry {
     * nanos-long is rebuilt with integer `div` (not `/` — nanos ~1.7e18
     * exceeds double's 2^53 exact-integer range), and NTZ is cast under
     * the session's UTC zone (wall-clock-preserving, matching how the
-    * DuckDB oracle reads the same naive micros). */
+    * DuckDB oracle reads the same naive micros). The read goes through
+    * [[tbl]], and `nanosAsLong` is one of the confs in its schema-cache
+    * key, so the cached `events` schema is the one inferred under it. */
   private[graft] def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = tbl(s, dir, "events")
@@ -97,14 +147,19 @@ object SparkEntry {
     * clamped to [512 KB, 128 MB]: at production scale the derivation
     * saturates at the 128 MB default (guide §6 — large sequential splits
     * are what a 100 TB scan wants), so this is scale-shape adaptation,
-    * not a local-only constant. SPARK_GRAFT_MAX_SPLIT_BYTES overrides
-    * both the derivation and the cap. */
+    * not a local-only constant. The input size is the sum of every
+    * regular file under `sfDir`, walked recursively, so a
+    * directory-shaped dataset counts its part files.
+    * SPARK_GRAFT_MAX_SPLIT_BYTES overrides both the derivation and the
+    * cap. */
   def adaptiveMaxSplitBytes(sfDir: String, cpus: Int): Long =
     sys.env.get("SPARK_GRAFT_MAX_SPLIT_BYTES").map(_.toLong).getOrElse {
       val total =
         try {
-          Option(new java.io.File(sfDir).listFiles())
-            .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
+          val files = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
+          try files.filter(java.nio.file.Files.isRegularFile(_))
+            .mapToLong(java.nio.file.Files.size(_)).sum()
+          finally files.close()
         } catch { case _: Throwable => 0L }
       math.min(128L << 20,
         math.max(512L << 10, total / math.max(1, 2 * cpus)))

@@ -419,6 +419,9 @@ object ZOrderExpr {
 case class PqEncodeExpr(child: Expression,
     codebook: Seq[Seq[(Long, Seq[Double])]], subDim: Int)
   extends UnaryExpression {
+  require(codebook.nonEmpty, "graft_pq_encode needs at least one subspace")
+  require(codebook.forall(_.nonEmpty),
+    "graft_pq_encode needs at least one centroid in every subspace")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
 
@@ -496,6 +499,8 @@ case class PqEncodeExpr(child: Expression,
 case class CentroidAssignExpr(child: Expression,
     centroids: Seq[(Long, Seq[Double])])
   extends UnaryExpression {
+  require(centroids.nonEmpty,
+    "graft_centroid_assign needs at least one centroid")
   override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("assigned", LongType,
       nullable = false),
@@ -569,8 +574,23 @@ case class CentroidAssignExpr(child: Expression,
   * those pay two interpreted lambda evaluations per emitted pair; this
   * is one tight loop per row inside whole-stage codegen. Order of
   * emitted pairs matches the HOF form (outer index ascending, inner
-  * ascending), so on a sorted distinct basket every pair is a < b. */
+  * ascending), so on a sorted distinct basket every pair is a < b.
+  * The loop reads elements with `getLong` and no null check, so the
+  * input must be `array<bigint>` without null elements (what
+  * `sort_array(collect_set(bigint))` yields); any other array type fails
+  * analysis instead of reading garbage. */
 case class SortedPairsExpr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes()
+  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, false) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+          .TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+          .TypeCheckFailure(s"$prettyName expects array<bigint> without " +
+            s"null elements, got $other") // toString shows containsNull
+    }
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("a", LongType,

@@ -265,6 +265,8 @@ object Similarity {
     * (k in the thousands) would otherwise dominate the job. */
   def assignToCentroids(df: DataFrame, emb: Column, id: Column,
                         cents: Seq[(Any, Seq[Double])]): DataFrame =
+    // an empty model takes this branch too (forall over nothing), and the
+    // native expression rejects it when it is built
     if (cents.forall(_._1.isInstanceOf[Long])) {
       // model as constructor data on ONE native expression instead of
       // ~70 literal nodes per centroid (the PqEncodeExpr discipline);
